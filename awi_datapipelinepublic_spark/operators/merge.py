@@ -10,13 +10,16 @@ with ``start_date = MIN(new.date_col)`` — base rows inside the new
 batch's window are discarded (re-statement / late-correction
 semantics), older history is preserved untouched.
 
-Scale design: the base table is partitioned by month(date_col). The
-filter ``date_col < cutoff`` then becomes partition pruning — at
-100 TB a monthly batch merge rewrites only the affected partitions'
-worth of data plus the new batch, never the full history. The staged
-overwrite (sources/writers.py) handles Spark's read-then-overwrite
-restriction; on a Delta-enabled cluster the exact primitive is
-``replaceWhere(f"{date_col} >= '{cutoff}'")``.
+Scale design: the base table is partitioned by month(date_col) into
+``_merge_month=yyyy-MM`` directories. Every row of a month before the
+cutoff's month is older than the cutoff, so those months are exactly
+the history a merge keeps untouched. :func:`merge_into_path` therefore
+reads and rewrites only the months ≥ the cutoff's month plus the new
+batch, and carries every older month directory into the new snapshot
+by hard link (sources/writers.py ``_publish_locked``): a daily batch
+costs one or two months of I/O, not the history. On a Delta-enabled
+cluster the same primitive is ``replaceWhere(f"{date_col} >=
+'{cutoff}'")``.
 """
 
 from __future__ import annotations
@@ -30,6 +33,20 @@ def merge_cutoff(new_batch: DataFrame, date_col: str):
     config.py:180-187). One tiny ungrouped aggregate; Spark plans it
     as a partial+final agg, no full shuffle."""
     return new_batch.agg(F.min(date_col).alias("mindate")).first()["mindate"]
+
+
+def _cutoff_and_month(new_batch: DataFrame, date_col: str):
+    """``(cutoff, its yyyy-MM month)``: :func:`merge_cutoff`'s one-row
+    aggregate with the month added to the same job. The month is
+    formatted by Spark, in the session time zone that also names the
+    ``_merge_month`` partitions: a collected timestamp comes back in
+    the driver's local zone, so a Python ``strftime`` of it can name
+    the wrong month near a month boundary."""
+    row = new_batch.agg(
+        F.min(date_col).alias("mindate"),
+        F.date_format(F.min(date_col), "yyyy-MM").alias("month"),
+    ).first()
+    return row["mindate"], row["month"]
 
 
 def merge_time_window(
@@ -72,41 +89,149 @@ def merge_into_path(
     partition_by_month: bool = True,
     allow_schema_evolution: bool = False,
 ) -> None:
-    """Storage-level merge: read base, merge, atomic-publish back
-    (writers.overwrite_table — versioned snapshot + pointer flip).
+    """Storage-level merge: read base, merge, atomic-publish back as a
+    new versioned snapshot behind the table's pointer symlink (the
+    writers.overwrite_table layout).
 
-    Partitioning by month(date_col) makes both sides of the merge
-    cheap: the ``< cutoff`` filter prunes partitions at scan time, and
-    the rewrite only produces files for months ≥ cutoff plus
-    pass-through of older months. ``allow_schema_evolution`` passes
-    through to :func:`merge_time_window` (added/omitted batch columns
-    pad with NULLs instead of failing the union).
+    With ``partition_by_month`` the merge is partition-scoped. Let
+    ``cut_month`` be the month of the batch's cutoff. The new snapshot
+    is the live snapshot's ``_merge_month >= cut_month`` directories
+    merged with the batch and written out, plus every older month
+    directory carried over unchanged by hard link. Each of those older
+    rows precedes the cutoff, so the filter would keep it anyway: the
+    result is row-identical to a full rewrite, and a daily batch costs
+    the months it restates instead of the whole history.
+
+    The full rewrite (read the whole base, merge, write every month)
+    remains for the cases a carry cannot preserve: a first load, a
+    base without ``_merge_month`` directories (a pre-versioning plain
+    directory, or a table written with ``partition_by_month=False``),
+    ``partition_by_month=False``, an empty batch, and a batch whose
+    column names or types differ from the live snapshot's (schema
+    evolution, which must rewrite history with the new columns).
+
+    Month directories are named in the session time zone, so the carry
+    assumes every merge into a table runs under the same one (the
+    engine's sessions pin UTC). Hard links assume a local POSIX
+    filesystem, the same assumption the pointer symlink and its atomic
+    rename already make. Snapshots share the carried files' inodes, so
+    deleting an old snapshot (retention GC) only drops link counts.
+    ``allow_schema_evolution`` passes through to
+    :func:`merge_time_window` (added/omitted batch columns pad with
+    NULLs instead of failing the union).
+
+    One publish lock is held across recovery, reading the live
+    snapshot, writing, carrying and the pointer flip, so a concurrent
+    publish can neither replace the snapshot being carried from nor be
+    lost under this merge's flip.
     """
     from pathlib import Path
 
-    from awi_datapipelinepublic_spark.sources.writers import overwrite_table, recover_table
+    from awi_datapipelinepublic_spark.sources.writers import (
+        _acquire_publish_lock,
+        _LockHeartbeat,
+        _release_publish_lock,
+    )
 
-    # Crash recovery FIRST: a kill inside overwrite_table's one-time
+    target = Path(base_path)
+    target.parent.mkdir(parents=True, exist_ok=True)
+    lock, token = _acquire_publish_lock(target)
+    try:
+        with _LockHeartbeat(lock, token) as hb:
+            _merge_into_path_locked(
+                spark,
+                target,
+                new_batch,
+                date_col,
+                partition_by_month,
+                allow_schema_evolution,
+                keep_versions=1,
+                heartbeat=hb,
+            )
+    finally:
+        _release_publish_lock(lock, token)
+
+
+def _merge_into_path_locked(
+    spark,
+    target,
+    new_batch: DataFrame,
+    date_col: str,
+    partition_by_month: bool,
+    allow_schema_evolution: bool,
+    keep_versions: int,
+    heartbeat=None,
+) -> None:
+    from awi_datapipelinepublic_spark.sources.writers import _publish_locked, recover_table
+
+    # Crash recovery FIRST: a kill inside the publish's one-time
     # legacy-dir migration window leaves the pointer absent while a
     # complete snapshot exists. Without this, the exists() check below
     # reads the table as empty, the merge publishes new_batch alone,
     # and keep_versions GC then deletes the old snapshot — silent loss
     # of all history. Mirrors merge_into_table's _recover_staged_swap.
-    recover_table(base_path)
+    recover_table(str(target))
 
     part_cols = ["_merge_month"] if partition_by_month else None
     if partition_by_month:
         new_batch = new_batch.withColumn("_merge_month", F.date_format(F.col(date_col), "yyyy-MM"))
-    if Path(base_path).exists():
-        base = spark.read.parquet(base_path)
-        if partition_by_month and "_merge_month" not in base.columns:
-            base = base.withColumn("_merge_month", F.date_format(F.col(date_col), "yyyy-MM"))
-        merged = merge_time_window(
-            base, new_batch, date_col, allow_schema_evolution=allow_schema_evolution
-        )
-    else:
+    carry = []
+    if not target.exists():
         merged = new_batch
-    overwrite_table(merged, base_path, partition_by=part_cols)
+    else:
+        plan = _plan_carry(spark, target, new_batch, date_col) if partition_by_month else None
+        if plan is not None:
+            merged, carry = plan
+        else:
+            base = spark.read.parquet(str(target))
+            if partition_by_month and "_merge_month" not in base.columns:
+                base = base.withColumn("_merge_month", F.date_format(F.col(date_col), "yyyy-MM"))
+            merged = merge_time_window(
+                base, new_batch, date_col, allow_schema_evolution=allow_schema_evolution
+            )
+    _publish_locked(merged, target, part_cols, keep_versions, heartbeat, carry=carry)
+
+
+def _plan_carry(spark, target, new_batch: DataFrame, date_col: str):
+    """Partition-scoped plan for :func:`merge_into_path`: ``(merged
+    tail, month directories to carry)``, or None when only a full
+    rewrite preserves the result. ``new_batch`` already carries its
+    ``_merge_month`` column."""
+    import os
+    import re
+
+    if not target.is_symlink():
+        return None  # pre-versioning plain directory: the publish migrates it
+    live = target.parent / os.readlink(target)
+    months = sorted(
+        d for d in live.iterdir() if d.is_dir() and d.name.startswith("_merge_month=")
+    )
+    if not months:
+        return None
+    cutoff, cut_month = _cutoff_and_month(new_batch, date_col)
+    if cutoff is None:
+        return None  # empty batch: the merge is the identity
+    # Only well-formed months strictly before the cutoff's month are
+    # carried; anything else (the NULL-date __HIVE_DEFAULT_PARTITION__
+    # directory included) is read and filtered with the tail.
+    carry = [
+        d
+        for d in months
+        if re.fullmatch(r"_merge_month=\d{4}-\d{2}", d.name)
+        and d.name.split("=", 1)[1] < cut_month
+    ]
+    tail_dirs = [d for d in months if d not in carry]
+    # With no tail months the batch lands in new months only; one carried
+    # directory is still read for the live schema.
+    base = spark.read.option("basePath", str(live)).parquet(
+        *[str(d) for d in tail_dirs or carry[:1]]
+    )
+    if {f.name: f.dataType for f in base.schema} != {
+        f.name: f.dataType for f in new_batch.schema
+    }:
+        return None  # schema evolution rewrites history with the new columns
+    tail = base if tail_dirs else base.limit(0)
+    return merge_time_window(tail, new_batch, date_col, cutoff=cutoff), carry
 
 
 def _table_location(spark, table: str):

@@ -144,11 +144,3 @@ def refresh_view(
     view.createOrReplaceTempView(spec.view_name)
     return view
 
-
-def register_base_tables(spark: SparkSession, specs: dict[str, PipelineSpec]) -> None:
-    """Expose merged base tables as temp views for the spark.sql surface
-    (the reference's BigQuery dataset analog)."""
-    for spec in specs.values():
-        p = Path(spec.base_table_path)
-        if p.exists():
-            spark.read.parquet(str(p)).createOrReplaceTempView(spec.name)

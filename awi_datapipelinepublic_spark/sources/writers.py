@@ -164,7 +164,17 @@ def _acquire_publish_lock(target: Path) -> tuple[Path, str]:
                         try:
                             os.link(debris, takeover)
                         except FileExistsError:
-                            pass  # a newer sub-lock already owns the path
+                            # A newer sub-lock already owns the path.
+                            # The debris IS the live racer's sub-lock
+                            # inode: leave it in place, as the main-lock
+                            # restore below leaves its claim, and back
+                            # off.
+                            raise ConcurrentPublishError(
+                                f"another writer is taking over the stale {lock} "
+                                "(sub-lock re-created mid-clear; restore raced "
+                                "a newer sub-lock); the engine is single-writer "
+                                "per table"
+                            ) from None
                         debris.unlink(missing_ok=True)
                         raise ConcurrentPublishError(
                             f"another writer is taking over the stale {lock} "
@@ -405,6 +415,7 @@ def overwrite_table(
     default 1 keeps only the live snapshot (no storage growth).
     """
     target = Path(path)
+    target.parent.mkdir(parents=True, exist_ok=True)
     lock, token = _acquire_publish_lock(target)
     try:
         with _LockHeartbeat(lock, token) as hb:
@@ -419,7 +430,24 @@ def _publish_locked(
     partition_by: list[str] | None,
     keep_versions: int,
     heartbeat: "_LockHeartbeat | None" = None,
+    carry: list[Path] | None = None,
 ) -> None:
+    """Publish ``df`` as the next snapshot of ``target``; the caller
+    holds the publish lock.
+
+    ``carry`` is the private step of the partition-scoped merge
+    (operators/merge.py ``merge_into_path``): leaf partition directories
+    of the live snapshot whose rows the new snapshot keeps unchanged.
+    After ``df`` is written, every file in each of them is hard-linked
+    (same inode, no data copied) into the same-named directory of the
+    new snapshot, and only then is ``_SUCCESS`` written. The Spark
+    committer's own marker is suppressed (and removed, should a
+    committer write it anyway), so a crash mid-carry leaves a
+    marker-less directory that recovery ignores and GC removes, never a
+    complete-looking snapshot missing history. ``df`` must produce no
+    directory that is also carried. GC needs no change: removing an old
+    snapshot only drops the link counts of files a newer one shares.
+    """
     path = str(target)
     recover_table(path)
     existing = _version_dirs(target)
@@ -434,7 +462,15 @@ def _publish_locked(
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
+    if carry:
+        w = w.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     w.parquet(str(vdir))
+    if carry:
+        (vdir / "_SUCCESS").unlink(missing_ok=True)
+        for src in carry:
+            (vdir / src.name).mkdir()
+            for f in src.iterdir():
+                os.link(f, vdir / src.name / f.name)
     (vdir / "_SUCCESS").touch()  # belt-and-braces if the committer marker is off
 
     def _abort_takeover() -> None:

@@ -1202,3 +1202,276 @@ def test_lost_heartbeat_abort_in_legacy_migration_keeps_legacy_visible(
     assert [r["pk"] for r in rows] == [10], (
         "recovery must surface the legacy data, not the refused snapshot"
     )
+
+
+def test_takeover_clear_restore_race_preserves_racer_sublock(tmp_path, monkeypatch):
+    """Sub-lock twin of the holder-inode race: a stale-looking takeover
+    sub-lock is renamed to debris, found fresh (a live racer's), and
+    the os.link restore loses to a newer sub-lock. The debris is the
+    live racer's only inode and must SURVIVE — unlinking it would
+    destroy the record of a takeover still in flight."""
+    import os
+    import time
+
+    from awi_datapipelinepublic_spark.sources.writers import ConcurrentPublishError
+
+    target = tmp_path / "t"
+    lock = tmp_path / ".t.lock"
+    lock.write_text("pid=1 token=dead\n")
+    stale = time.time() - (writers._LOCK_STALE_SECONDS + 60)
+    os.utime(lock, (stale, stale))
+    takeover = tmp_path / ".t.lock.takeover"
+    takeover.write_text("pid=2 token=racer\n")
+    tstale = time.time() - (writers._TAKEOVER_STALE_SECONDS + 5)
+    os.utime(takeover, (tstale, tstale))
+
+    real_rename = os.rename
+
+    def racer_alive_then_newer_sublock(src, dst):
+        os.utime(src)  # the racer's sub-lock is live after all
+        real_rename(src, dst)
+        takeover.write_text("pid=3 token=newer\n")  # lands in the window
+
+    monkeypatch.setattr(writers.os, "rename", racer_alive_then_newer_sublock)
+    with pytest.raises(ConcurrentPublishError, match="taking over"):
+        writers._acquire_publish_lock(target)
+    monkeypatch.undo()
+    debris = list(tmp_path.glob(".t.lock.takeover.gc-*"))
+    assert len(debris) == 1, "racer's sub-lock inode must survive as debris"
+    assert "token=racer" in debris[0].read_text()
+    assert "token=newer" in takeover.read_text(), "newer sub-lock untouched"
+    assert lock.read_text() == "pid=1 token=dead\n", "stale lock untouched"
+
+
+# ---------------------------------------------------------------------------
+# Partition-scoped merge: merge_into_path rewrites only the months at or
+# after the cutoff's month and hard-links every older month directory
+# from the live snapshot into the new one.
+# ---------------------------------------------------------------------------
+
+
+def _live(path) -> pathlib.Path:
+    path = pathlib.Path(path)
+    return path.parent / path.readlink()
+
+
+def _month_inodes(path) -> dict[str, set[int]]:
+    """month value → inodes of the data files of the live snapshot."""
+    out: dict[str, set[int]] = {}
+    for f in _live(path).glob("_merge_month=*/*.parquet"):
+        out.setdefault(f.parent.name.split("=", 1)[1], set()).add(f.stat().st_ino)
+    return out
+
+
+def _days(start: dt.date, n: int, per_day: int, first_pk: int):
+    return [
+        (first_pk + i * per_day + j, start + dt.timedelta(days=i))
+        for i in range(n)
+        for j in range(per_day)
+    ]
+
+
+def _days_frame(spark, start: dt.date, n: int, per_day: int, first_pk: int):
+    """``_days`` as a DataFrame built by Spark expressions (no Python
+    worker), so a merge of it costs only the merge's own jobs."""
+    return spark.range(n * per_day, numPartitions=2).select(
+        (F.col("id") + first_pk).alias("pk"),
+        F.date_add(F.lit(start), (F.col("id") / per_day).cast("int")).alias("d"),
+    )
+
+
+def _merge_days(spark, path, start: dt.date, n: int, per_day: int, first_pk: int):
+    """Merge ``per_day`` rows for each of ``n`` days from ``start``;
+    return the rows for the replay."""
+    merge_into_path(spark, str(path), _days_frame(spark, start, n, per_day, first_pk), "d")
+    return _days(start, n, per_day, first_pk)
+
+
+def _merge_rows(spark, path, rows):
+    merge_into_path(spark, str(path), spark.createDataFrame(rows, "pk long, d date"), "d")
+
+
+def test_carry_write_cost_tracks_batch(spark, tmp_path):
+    """Twelve daily merges, each restating the trailing 14 days: every
+    data file of a month before the cutoff's month keeps its inode
+    (carried by hard link), every file of a month at or after it is
+    new, and the table equals the reference replay."""
+    path = tmp_path / "base"
+    # 2024-01-01 .. 2024-07-08; the cutoffs below cross into July
+    batches = [_merge_days(spark, path, dt.date(2024, 1, 1), 190, 2, 0)]
+    for k in range(12):
+        start = dt.date(2024, 6, 26) + dt.timedelta(days=k)
+        before = _month_inodes(path)
+        batches.append(_merge_days(spark, path, start, 14, 2, 10_000 * (k + 1)))
+        after = _month_inodes(path)
+        cut_month = start.strftime("%Y-%m")
+        old = set().union(*before.values())
+        for month, inodes in after.items():
+            if month < cut_month:
+                assert inodes == before[month], f"{month} must be carried"
+            else:
+                assert not inodes & old, f"{month} must be rewritten"
+        assert {m for m in after if m < cut_month} == {m for m in before if m < cut_month}
+    assert _rows(spark, path) == _merge_expected(batches)
+    assert len(list(path.parent.glob(".base.v-*"))) == 1, "GC keeps the live snapshot"
+
+
+def test_carry_crash_mid_link_keeps_old_snapshot(spark, tmp_path, monkeypatch):
+    """A kill after some hard links: readers still see the old rows, the
+    half-built snapshot has no _SUCCESS (so recovery never publishes
+    it), and the next merge's GC removes it."""
+    import os
+
+    path = tmp_path / "base"
+    history = _merge_days(spark, path, dt.date(2024, 1, 1), 150, 1, 0)  # five months
+    old_rows = _rows(spark, path)
+    live = _live(path)
+
+    real_link = os.link
+    calls = {"n": 0}
+
+    def link_then_crash(src, dst, *a, **k):
+        calls["n"] += 1
+        if calls["n"] > 2:
+            raise OSError("killed mid-carry")
+        return real_link(src, dst, *a, **k)
+
+    monkeypatch.setattr(writers.os, "link", link_then_crash)
+    with pytest.raises(OSError, match="mid-carry"):
+        _merge_days(spark, path, dt.date(2024, 5, 20), 5, 1, 1_000)
+    monkeypatch.undo()
+    assert calls["n"] == 3
+    assert _live(path) == live
+    assert _rows(spark, path) == old_rows
+    debris = [d for d in path.parent.glob(".base.v-*") if d != live]
+    assert len(debris) == 1 and not (debris[0] / "_SUCCESS").exists()
+    writers.recover_table(str(path))
+    assert _live(path) == live, "recovery must not publish the half-built dir"
+    assert not list(path.parent.glob(".base.lock*")), "lock released"
+
+    again = _merge_days(spark, path, dt.date(2024, 5, 25), 5, 1, 2_000)
+    assert not debris[0].exists(), "GC removes the half-built snapshot"
+    assert _rows(spark, path) == _merge_expected([history, again])
+
+
+def test_carry_fallbacks_match_full_rewrite(spark, tmp_path):
+    """A batch whose schema differs from the live snapshot's (an added
+    column, an omitted column, a changed type) takes the full rewrite:
+    no file is shared with the old snapshot, and the rows equal the
+    whole-base merge_time_window plan."""
+    from pyspark.sql.types import LongType
+
+    base = spark.range(60, numPartitions=2).select(
+        F.col("id").alias("pk"),
+        F.date_add(F.lit(dt.date(2024, 1, 1)), (F.col("id") * 2).cast("int")).alias("d"),
+        (F.col("id") % 7).cast("int").alias("v"),
+    )
+    cases = {
+        "added": ("SELECT 900L pk, DATE'2024-02-10' d, 1 v, 2.5D score", True),
+        "omitted": ("SELECT 901L pk, DATE'2024-02-10' d", True),
+        "retyped": ("SELECT 902L pk, DATE'2024-02-10' d, 1000000000000L v", False),
+    }
+    for name, (sql, evolve) in cases.items():
+        path = tmp_path / name
+        merge_into_path(spark, str(path), base, "d")
+        old = set().union(*_month_inodes(path).values())
+        batch = spark.sql(sql)
+        merge_into_path(spark, str(path), batch, "d", allow_schema_evolution=evolve)
+        new = set().union(*_month_inodes(path).values())
+        assert not new & old, f"{name}: schema change must rewrite every month"
+        want = merge_time_window(base, batch, "d", allow_schema_evolution=evolve)
+        cols = sorted(want.columns)
+        got = spark.read.parquet(str(path)).drop("_merge_month")
+        assert sorted(got.columns) == cols, name
+        assert sorted(got.select(*cols).collect()) == sorted(want.select(*cols).collect()), name
+        if name == "retyped":
+            assert got.schema["v"].dataType == LongType()
+
+
+def test_carry_time_travel_survives_gc(spark, tmp_path):
+    """keep_versions=3 over carried merges: retained older snapshots
+    still read their own rows although they share carried files with
+    newer ones, and GC of the oldest leaves every retained one whole."""
+    from awi_datapipelinepublic_spark.operators import merge as merge_mod
+    from awi_datapipelinepublic_spark.sources.writers import list_versions, read_version
+
+    path = tmp_path / "tt"
+
+    def merge_keep3(start, n, first_pk):
+        lock, token = writers._acquire_publish_lock(path)
+        try:
+            merge_mod._merge_into_path_locked(
+                spark, path, _days_frame(spark, start, n, 1, first_pk), "d",
+                True, False, keep_versions=3,
+            )
+        finally:
+            writers._release_publish_lock(lock, token)
+        return _days(start, n, 1, first_pk)
+
+    batches = [merge_keep3(dt.date(2024, 1, 1), 120, 0)]
+    states = {1: _merge_expected(batches)}
+    for k in range(4):
+        batches.append(merge_keep3(dt.date(2024, 4, 20 + 2 * k), 10, 1_000 * (k + 1)))
+        states[k + 2] = _merge_expected(batches)
+    kept = list_versions(str(path))
+    assert [n for n, _ in kept] == [3, 4, 5]
+    jan = [
+        {f.stat().st_ino for f in pathlib.Path(d).glob("_merge_month=2024-01/*.parquet")}
+        for _, d in kept
+    ]
+    assert jan[0] and jan[0] == jan[1] == jan[2], "retained snapshots share January"
+    for n, _ in kept:
+        got = sorted((r["pk"], r["d"]) for r in read_version(spark, str(path), n).collect())
+        assert got == states[n], n
+    with pytest.raises(KeyError):
+        read_version(spark, str(path), 2)
+    assert _rows(spark, path) == states[5]
+
+
+def test_carry_drops_null_date_base_rows(spark, tmp_path):
+    """Base rows with a NULL date live in the __HIVE_DEFAULT_PARTITION__
+    directory. It is never carried: the next merge drops those rows
+    (NULL < cutoff is not true), exactly as the full rewrite does."""
+    path = tmp_path / "base"
+    first = _days(dt.date(2024, 1, 1), 90, 1, 0) + [(500, None), (501, None)]
+    _merge_rows(spark, path, first)
+    assert (_live(path) / "_merge_month=__HIVE_DEFAULT_PARTITION__").is_dir()
+    jan = _month_inodes(path)["2024-01"]
+    batch = _days(dt.date(2024, 3, 15), 5, 1, 1_000)
+    _merge_rows(spark, path, batch)
+    assert _month_inodes(path)["2024-01"] == jan, "the carry path ran"
+    assert not (_live(path) / "_merge_month=__HIVE_DEFAULT_PARTITION__").exists()
+    want = sorted(
+        [(pk, d) for pk, d in first if d is not None and d < dt.date(2024, 3, 15)] + batch
+    )
+    assert _rows(spark, path) == want
+
+
+def test_carry_cut_month_follows_session_time_zone(spark, tmp_path):
+    """Partitions are named in the session time zone. With a session
+    zone behind the driver's, a cutoff just after midnight UTC on March
+    1st is still February in the session: the February directory must
+    be rewritten, not carried, or a base row at or after the cutoff
+    would survive the merge."""
+    path = tmp_path / "base"
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        base = spark.sql(
+            "SELECT 1L pk, TIMESTAMP'2024-01-15 12:00:00Z' ts UNION ALL "
+            "SELECT 2L, TIMESTAMP'2024-02-10 12:00:00Z' UNION ALL "
+            "SELECT 3L, TIMESTAMP'2024-03-01 04:00:00Z'"  # Feb 29, 20:00 local
+        )
+        merge_into_path(spark, str(path), base, "ts")
+        assert sorted(p.name for p in _live(path).glob("_merge_month=*")) == [
+            "_merge_month=2024-01",
+            "_merge_month=2024-02",
+        ]
+        jan = _month_inodes(path)["2024-01"]
+        batch = spark.sql("SELECT 9L pk, TIMESTAMP'2024-03-01 03:00:00Z' ts")
+        merge_into_path(spark, str(path), batch, "ts")
+        assert _month_inodes(path)["2024-01"] == jan, "the carry path ran"
+        got = sorted(r["pk"] for r in spark.read.parquet(str(path)).collect())
+        assert got == [1, 2, 9]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)

@@ -64,6 +64,28 @@ def test_run_file_then_incremental_merge(spark, spec):
     assert set(rows) == {"P-1", "P-3"}            # P-2 owned by batch 2's window → gone
 
 
+def test_run_file_creates_missing_base_parent(spark, tmp_path):
+    """A fresh tree has no base/ directory yet: the first run_file must
+    create the base table's parent (where its publish lock lives)
+    instead of failing on the lock file."""
+    root = tmp_path / "fresh"
+    schema_file = tmp_path / "renewals.json"
+    schema_file.write_text(json.dumps(FIELDS))
+    spec = PipelineSpec(
+        name="renewals",
+        schema_file=str(schema_file),
+        date_col="PolicyExpiryDate",
+        landing_dir=str(root / "landing"),
+        staging_dir=str(root / "staging"),
+        base_table_path=str(root / "base" / "renewals"),
+    )
+    assert not (root / "base").exists()
+    f1 = _drop(spec, "renewals.csv", HDR + "12,P-1,2024-01-15,10\n")
+    run_file(spark, spec, f1)
+    rows = [r["PolicyNumber"] for r in spark.read.parquet(spec.base_table_path).collect()]
+    assert rows == ["P-1"]
+
+
 def test_quarantine_on_bad_input(spark, spec):
     bad = _drop(spec, "renewals.csv", "\x00\x01not-a-csv")
     # a header-less binary blob yields zero schema columns → clean fails
