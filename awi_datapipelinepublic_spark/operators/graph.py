@@ -578,6 +578,10 @@ def link_prediction(
     capped at ``max_degree`` (the pair_lift max_basket stance: refuse
     to detonate, replayable in the oracle as a degree filter; a
     1e6-degree hub's wedge set carries no ranking signal anyway).
+    ``max_degree`` itself must be at most 65,536; a larger value
+    raises ValueError. The 1/ln(d) table has one driver-side row per
+    allowed degree, and at that degree one center already yields
+    C(d, 2) ≈ 2.1e9 wedges.
     One groupBy builds per-center sorted neighbor arrays (bounded at
     max_degree ids each), a codegen slice-transform explodes each
     array's unordered pairs with the center's weight attached, one
@@ -590,6 +594,8 @@ def link_prediction(
     """
     import math
 
+    if max_degree > 65_536:
+        raise ValueError(f"link_prediction needs max_degree <= 65536, got {max_degree}")
     e = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),

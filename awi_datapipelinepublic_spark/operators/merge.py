@@ -127,29 +127,19 @@ def merge_into_path(
     """
     from pathlib import Path
 
-    from awi_datapipelinepublic_spark.sources.writers import (
-        _acquire_publish_lock,
-        _LockHeartbeat,
-        _release_publish_lock,
-    )
+    from awi_datapipelinepublic_spark.sources.writers import _publish_lock
 
     target = Path(base_path)
-    target.parent.mkdir(parents=True, exist_ok=True)
-    lock, token = _acquire_publish_lock(target)
-    try:
-        with _LockHeartbeat(lock, token) as hb:
-            _merge_into_path_locked(
-                spark,
-                target,
-                new_batch,
-                date_col,
-                partition_by_month,
-                allow_schema_evolution,
-                keep_versions=1,
-                heartbeat=hb,
-            )
-    finally:
-        _release_publish_lock(lock, token)
+    with _publish_lock(target):
+        _merge_into_path_locked(
+            spark,
+            target,
+            new_batch,
+            date_col,
+            partition_by_month,
+            allow_schema_evolution,
+            keep_versions=1,
+        )
 
 
 def _merge_into_path_locked(
@@ -160,7 +150,6 @@ def _merge_into_path_locked(
     partition_by_month: bool,
     allow_schema_evolution: bool,
     keep_versions: int,
-    heartbeat=None,
 ) -> None:
     from awi_datapipelinepublic_spark.sources.writers import _publish_locked, recover_table
 
@@ -189,7 +178,7 @@ def _merge_into_path_locked(
             merged = merge_time_window(
                 base, new_batch, date_col, allow_schema_evolution=allow_schema_evolution
             )
-    _publish_locked(merged, target, part_cols, keep_versions, heartbeat, carry=carry)
+    _publish_locked(merged, target, part_cols, keep_versions, carry=carry)
 
 
 def _plan_carry(spark, target, new_batch: DataFrame, date_col: str):
@@ -302,30 +291,20 @@ def merge_into_table(
     affected partitions rewrite; the monthly partitioning below is what
     makes that cheap.
     """
-    from awi_datapipelinepublic_spark.sources.writers import (
-        _acquire_publish_lock,
-        _LockHeartbeat,
-        _release_publish_lock,
-    )
+    from awi_datapipelinepublic_spark.sources.writers import _publish_lock
 
     if partition_by_month:
         new_batch = new_batch.withColumn(
             "_merge_month", F.date_format(F.col(date_col), "yyyy-MM")
         )
-    # Same advisory publish lock as the path writer (writers.py), keyed
-    # on the managed-table location so every writer of this catalog
-    # name contends on one file: without it two concurrent catalog
-    # merges race the `__staging` create/DROP/RENAME and one batch's
-    # merge silently vanishes. Held across recovery + read + staging +
-    # swap; heartbeat keeps a slow writer's lock fresh.
-    loc = _table_location(spark, table)
-    loc.parent.mkdir(parents=True, exist_ok=True)
-    lock, token = _acquire_publish_lock(loc)
-    try:
-        with _LockHeartbeat(lock, token):
-            _merge_into_table_locked(spark, table, new_batch, date_col, partition_by_month)
-    finally:
-        _release_publish_lock(lock, token)
+    # Same kernel flock as the path writer (writers._publish_lock),
+    # keyed on the managed-table location so every writer of this
+    # catalog name contends on one lock file: without it two concurrent
+    # catalog merges race the `__staging` create/DROP/RENAME and one
+    # batch's merge silently vanishes. Held across recovery + read +
+    # staging + swap; a contending merge gets ConcurrentPublishError.
+    with _publish_lock(_table_location(spark, table)):
+        _merge_into_table_locked(spark, table, new_batch, date_col, partition_by_month)
 
 
 def _merge_into_table_locked(
@@ -523,10 +502,8 @@ def refresh_monthly_rollup(
     from pathlib import Path
 
     from awi_datapipelinepublic_spark.sources.writers import (
-        _acquire_publish_lock,
-        _LockHeartbeat,
+        _publish_lock,
         _publish_locked,
-        _release_publish_lock,
         recover_table,
     )
 
@@ -536,36 +513,25 @@ def refresh_monthly_rollup(
     # would interleave and one refresh's months would vanish from the
     # survivor's snapshot.
     target = Path(rollup_path)
-    target.parent.mkdir(parents=True, exist_ok=True)
-    lock, token = _acquire_publish_lock(target)
-    try:
-        with _LockHeartbeat(lock, token) as hb:
-            recover_table(rollup_path)
-            have_rollup = target.exists()
-            if since_month is not None and not have_rollup:
-                # No stored rollup to merge the fresh months over: an
-                # incremental refresh would publish ONLY months >=
-                # since_month and silently truncate all history. Fall
-                # back to a full rebuild from the unfiltered base.
-                since_month = None
-            base = spark.read.parquet(base_path)
-            if since_month is not None:
-                base = base.filter(F.col("_merge_month") >= F.lit(since_month))
-            fresh = base.groupBy("_merge_month", *group_cols).agg(*agg_exprs)
-            if since_month is not None:
-                old = spark.read.parquet(rollup_path)
-                merged = merge_time_window(old, fresh, "_merge_month", cutoff=since_month)
-            else:
-                merged = fresh
-            _publish_locked(
-                merged,
-                target,
-                partition_by=["_merge_month"],
-                keep_versions=1,
-                heartbeat=hb,
-            )
-    finally:
-        _release_publish_lock(lock, token)
+    with _publish_lock(target):
+        recover_table(rollup_path)
+        have_rollup = target.exists()
+        if since_month is not None and not have_rollup:
+            # No stored rollup to merge the fresh months over: an
+            # incremental refresh would publish ONLY months >=
+            # since_month and silently truncate all history. Fall
+            # back to a full rebuild from the unfiltered base.
+            since_month = None
+        base = spark.read.parquet(base_path)
+        if since_month is not None:
+            base = base.filter(F.col("_merge_month") >= F.lit(since_month))
+        fresh = base.groupBy("_merge_month", *group_cols).agg(*agg_exprs)
+        if since_month is not None:
+            old = spark.read.parquet(rollup_path)
+            merged = merge_time_window(old, fresh, "_merge_month", cutoff=since_month)
+        else:
+            merged = fresh
+        _publish_locked(merged, target, partition_by=["_merge_month"], keep_versions=1)
 
 
 def cdc_apply(

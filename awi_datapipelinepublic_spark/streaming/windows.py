@@ -408,26 +408,6 @@ class EwmaProcessor(StatefulProcessor):
         pass
 
 
-def running_user_ewma_tws(
-    events: DataFrame, alpha: float = 0.3, order_col: str = "event_id"
-) -> DataFrame:
-    """``transformWithStateInPandas`` twin of :func:`running_user_ewma`
-    — same recursion, modern state API (per-variable ValueState,
-    RocksDB-backed on a real cluster; idle-key eviction becomes a
-    processing-time timer instead of GroupStateTimeout). Same
-    environment note as :func:`running_user_totals_tws`."""
-    return (
-        events.select("user_id", F.col(order_col).alias("__ord"), "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            EwmaProcessor(alpha),
-            outputStructType=EWMA_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="None",
-        )
-    )
-
-
 def running_user_totals_tws(events: DataFrame) -> DataFrame:
     """Spark 4 ``transformWithStateInPandas`` twin of
     :func:`running_user_totals` — same per-user running totals, on the

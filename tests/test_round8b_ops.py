@@ -144,6 +144,8 @@ def test_link_prediction_degree_cap_drops_hub_centers(spark):
     edges = spark.createDataFrame([(0, i) for i in range(1, 6)], "src int, dst int")
     assert link_prediction(edges, max_degree=4, k=10).count() == 0
     assert link_prediction(edges, max_degree=5, k=10).count() == 10  # C(5,2)
+    with pytest.raises(ValueError, match="max_degree"):
+        link_prediction(edges, max_degree=65_537)
 
 
 # ------------------------------------------------------------------ triples
